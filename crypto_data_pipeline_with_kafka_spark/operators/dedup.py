@@ -27,6 +27,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from crypto_data_pipeline_with_kafka_spark.catalog import widen_if_narrow
+from crypto_data_pipeline_with_kafka_spark.operators._store_step import (  # noqa: F401
+    StoreBatch,
+    StoreFamily,
+    check_store_algo,
+    check_store_batch_monotonic,
+    run_store_step,
+)
 from crypto_data_pipeline_with_kafka_spark.functions.text import (
     kgrams_from_tokens,
     shingles_from_tokens,
@@ -422,101 +429,44 @@ def incremental_minhash_dedup(
 ) -> DataFrame:
     """Dedup an ARRIVING batch against every previously seen document —
     the operational 100-TB shape: a corpus is never re-deduped from
-    scratch; new data joins a persisted index. (The near-dup, set-based
-    generalization of the reference's arriving-data-vs-stored exact
-    dedup: URL existence check / INSERT IGNORE in
-    ``dags/consumer_prices.py:70-80`` and the pre-write anti-join in
-    ``dags/spark_job_1.py:81-93``.)
+    scratch; new data joins a persisted index. The MinHash member of
+    the incremental store family; the batch-stamped contract
+    (idempotent per-batch overwrites, ``batch_id < N`` pruning,
+    latest-wins re-ingest, flags read back) is the shared one in
+    :mod:`operators._store_step`.
 
-    The index lives under ``store_dir`` as two parquet tables, each
-    partitioned by ``batch_id``: ``bands`` (id, band_id, band_key, n_sh
-    — the shingle count rides on the band rows, so per-doc sizes read
-    back from the ``band_id='0'`` slice with no extra table or shuffle)
-    and ``shingles`` (id, shingle). Each call (one batch) does:
-
-    1. shingle + MinHash-sign the batch;
-    2. candidates = batch bands vs indexed bands (the BATCH side is
-       broadcast — the index is scanned but NEVER shuffled) plus the
-       batch's within-batch band self-join;
-    3. exact-Jaccard verify on candidates only, reading ONLY the
-       candidate ids' shingles from the store (left-semi on the
-       candidate id list, AQE-broadcast when small — O(candidate
-       shingles), not O(index));
-    4. flag each new doc's best earlier duplicate (max jaccard, ties to
-       the smallest id), written durably to
-       ``store_dir/flagged/batch_id=<batch_id>``;
-    5. write the batch's bands/shingles into the index under
-       ``batch_id=<batch_id>`` partitions.
-
-    Every write is an OVERWRITE of this batch's own partitions and every
-    index read prunes to ``batch_id < batch_id`` (PartitionFilters — a
-    redelivered or half-written current batch is excluded by directory
-    pruning, not scanned-and-filtered), so the step is idempotent under
-    foreachBatch redelivery and crash-safe at any point: re-running
-    batch N rewrites exactly N's partitions and recomputes N's flags
-    from batches < N only. The returned DataFrame re-reads the written
-    flags — stable under recompute, never re-deriving from a since-
-    mutated index.
+    The index is two tables under ``store_dir``: ``bands`` (id,
+    band_id, band_key, n_sh) and ``shingles`` (id, shingle).
+    Candidates are documents sharing a band key; verify is exact
+    Jaccard over the candidates' shingles only; each new doc keeps its
+    best earlier duplicate (max jaccard, ties to the smallest id) as
+    (id, dup_of, jaccard).
 
     ALL documents are indexed, duplicates included: if A~B and B~C but
-    A≁C, a later C must still be caught via B. An id RE-INGESTED in a
-    later batch (content updated) never self-flags, and its latest
-    content wins every verify — the stored earlier rows are excluded
-    from the Jaccard computation (same latest-wins contract as the
-    hamming and IVF stores; pytest-pinned). This also makes the
-    result batching-invariant — as long as batches arrive in increasing
-    (``batch_id``, ``id_col``) order, the flagged set is EXACTLY
-    ``{id_b : ∃ id_a < id_b with a shared band key and jaccard ≥ t}``,
-    i.e. identical to what the one-shot :func:`minhash_lsh_dedup` run
-    derives (band keys and jaccard are per-pair deterministic, so when a
-    pair's members meet is irrelevant) — the equivalence the oracle and
-    ``tests/test_dedup_similarity.py`` check.
+    A≁C, a later C must still be caught via B. With batches in
+    increasing (``batch_id``, ``id_col``) order the flagged set is
+    EXACTLY ``{id_b : ∃ id_a < id_b with a shared band key and jaccard
+    ≥ t}`` — what the one-shot :func:`minhash_lsh_dedup` derives (band
+    keys and jaccard are per-pair deterministic), the equivalence the
+    oracle and ``tests/test_dedup_similarity.py`` check.
 
-    Returns the flagged rows (id, dup_of, jaccard) read back from the
-    flag store; do not delete ``store_dir`` while holding it.
-
-    SELF-stamped fingerprint era (r8, like the winnow store): (k,
-    num_hashes, bands) shape the stored shingles and band keys, so a
-    store built at one geometry queried with another silently
-    mis-candidates (band keys never collide correctly) instead of
-    erroring; ``min_jaccard`` is a read-side knob and stays free per
-    batch. The stamp check is metadata-plus-one-tiny-read, here in the
-    WRITING wrapper so the side-effect-free plan builder stays usable
-    for plan-shape tests."""
-    spark = new_docs.sparkSession
-    check_store_algo(
-        spark, store_dir, f"{store_dir}/bands",
-        f"minhash/k={k}/h={num_hashes}/bands={bands}",
-    )
-    flagged, to_unpersist = _incremental_flag_plan(
-        new_docs,
+    Self-stamped era: (k, num_hashes, bands) shape the stored shingles
+    and band keys, so a store built at one geometry refuses another
+    (``check_store_algo``); ``min_jaccard`` is a read-side knob and
+    stays free per batch."""
+    return run_store_step(
+        new_docs.sparkSession,
+        _minhash_family(
+            new_docs, text_col=text_col, id_col=id_col, k=k,
+            num_hashes=num_hashes, bands=bands, min_jaccard=min_jaccard,
+        ),
         store_dir,
         batch_id,
-        text_col=text_col,
-        id_col=id_col,
-        k=k,
-        num_hashes=num_hashes,
-        bands=bands,
-        min_jaccard=min_jaccard,
     )
-    bands_new, sh_new, _ = to_unpersist
-    flagged_path = f"{store_dir}/flagged/batch_id={batch_id}"
-    flagged.write.mode("overwrite").parquet(flagged_path)
-
-    # index writes: overwrite THIS batch's partition only — idempotent
-    bands_new.write.mode("overwrite").parquet(
-        f"{store_dir}/bands/batch_id={batch_id}"
-    )
-    sh_new.write.mode("overwrite").parquet(f"{store_dir}/shingles/batch_id={batch_id}")
-    for df in to_unpersist:
-        df.unpersist()
-    return spark.read.parquet(flagged_path)
 
 
-def _incremental_flag_plan(
+def _minhash_family(
     new_docs: DataFrame,
-    store_dir: str,
-    batch_id: int,
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
@@ -524,113 +474,38 @@ def _incremental_flag_plan(
     num_hashes: int = 12,
     bands: int = 4,
     min_jaccard: float = 0.8,
-) -> tuple[DataFrame, tuple[DataFrame, DataFrame, DataFrame]]:
-    """Lazy flag plan for one incremental batch (split out so plan tests
-    can assert its physical shape without running the writes). Returns
-    (flagged, (bands_new, sh_new, cand)) — the latter are persisted and
-    owned by the caller."""
-    spark = new_docs.sparkSession
-    # local import: sources.sinks ← operators would be circular the other way
-    from crypto_data_pipeline_with_kafka_spark.sources.sinks import target_exists
+) -> StoreFamily:
+    def featurize(pin) -> StoreBatch:
+        sh_new = pin(shingle_rows(new_docs, text_col, id_col, k))
+        # n_sh rides on the band rows (the stored layout)
+        bands_new = pin(minhash_band_rows(
+            minhash_signatures(sh_new, id_col, num_hashes, with_size=True),
+            id_col, num_hashes, bands, carry_cols=("n_sh",),
+        ))
+        return StoreBatch(
+            index=(bands_new, sh_new),
+            base=sh_new,
+            a=bands_new.select(F.col(id_col).alias("id_a"), "band_id", "band_key"),
+            b=bands_new.select(F.col(id_col).alias("id_b"), "band_id", "band_key"),
+        )
 
-    bands_path = f"{store_dir}/bands"
-    sh_path = f"{store_dir}/shingles"
-
-    sh_new = shingle_rows(new_docs, text_col, id_col, k).persist()
-    bands_new = minhash_band_rows(
-        minhash_signatures(sh_new, id_col, num_hashes, with_size=True),
-        id_col,
-        num_hashes,
-        bands,
-        carry_cols=("n_sh",),
-    ).persist()
-    sizes_new = bands_new.filter(F.col("band_id") == "0").select(id_col, "n_sh")
-
-    def read_earlier(path: str, keep_batch: bool = False) -> DataFrame:
-        # batch_id is a partition directory: the filter prunes at
-        # planning time, so current-batch leftovers are never scanned
-        df = spark.read.parquet(path).filter(F.col("batch_id") < batch_id)
-        return df if keep_batch else df.drop("batch_id")
-
-    new_b = bands_new.select(F.col(id_col).alias("id_b"), "band_id", "band_key")
-    new_a = bands_new.select(F.col(id_col).alias("id_a"), "band_id", "band_key")
-    cand = (
-        new_a.join(F.broadcast(new_b), ["band_id", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    have_store = target_exists(spark, bands_path)
-    if have_store:
-        old_bands = read_earlier(bands_path).select(
+    return StoreFamily(
+        id_col=id_col,
+        tables=("bands", "shingles"),
+        base_table="shingles",
+        keys=("band_id", "band_key"),
+        featurize=featurize,
+        earlier_keys=lambda e: e.select(
             F.col(id_col).alias("id_a"), "band_id", "band_key"
-        )
-        cand = cand.unionByName(
-            old_bands.join(F.broadcast(new_b), ["band_id", "band_key"])
-            # an id re-ingested in a later batch meets its indexed self
-            # here — never flag a row as its own duplicate
-            .filter(F.col("id_a") != F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-    cand = cand.distinct().persist()
-
-    # Verify stage, key-pruned: only the candidate ids' shingles/sizes
-    # ever leave the store scan (left-semi on the candidate id list).
-    # NO forced broadcast on cand/ids_a: unlike the batch's own bands
-    # (structurally O(micro-batch)), the candidate set is only
-    # COLLISION-bounded — a hot band could blow a forced broadcast up;
-    # AQE broadcasts it at runtime whenever it actually is small (the
-    # normal case), and degrades to a shuffle instead of an OOM when
-    # it is not.
-    sh_all = sh_new
-    sizes_all = sizes_new
-    if have_store:
-        # A re-ingested id's CURRENT shingles/size are authoritative:
-        # rows already in this batch are anti-joined out of the earlier
-        # side (otherwise intersections double-count), and an id
-        # re-ingested across EARLIER batches keeps only its latest
-        # batch's rows (max batch_id per id — all of this over the
-        # candidate-pruned subset, never the unpruned index).
-        new_ids = sh_new.select(id_col).distinct()
-        ids_a = cand.select(F.col("id_a").alias(id_col)).distinct()
-        latest = (
-            read_earlier(bands_path, keep_batch=True)
-            .filter(F.col("band_id") == "0")
-            .join(ids_a, id_col, "left_semi")
-            .join(new_ids, id_col, "left_anti")
-            .groupBy(id_col)
-            .agg(
-                F.max("batch_id").alias("batch_id"),
-                F.max_by("n_sh", "batch_id").alias("n_sh"),
-            )
-        )
-        sh_all = sh_new.unionByName(
-            read_earlier(sh_path, keep_batch=True)
-            .join(
-                latest.select(id_col, "batch_id"),
-                [id_col, "batch_id"],
-                "left_semi",
-            )
-            .drop("batch_id")
-        )
-        sizes_all = sizes_new.unionByName(latest.select(id_col, "n_sh"))
-    inter = (
-        cand.join(sh_all.select(F.col(id_col).alias("id_a"), "shingle"), "id_a")
-        .join(sh_all.select(F.col(id_col).alias("id_b"), "shingle"), ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
+        ),
+        verify=lambda cand, sh: jaccard_for_candidates(
+            sh, cand, id_col, min_jaccard
+        ),
+        score="jaccard",
+        descending=True,
+        match_col="dup_of",
+        algo=f"minhash/k={k}/h={num_hashes}/bands={bands}",
     )
-    dup_pairs = _jaccard_from_inter(inter, sizes_all, min_jaccard)
-    w = Window.partitionBy("id_b").orderBy(F.col("jaccard").desc(), F.col("id_a").asc())
-    flagged = (
-        dup_pairs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("id_b").alias(id_col),
-            F.col("id_a").alias("dup_of"),
-            "jaccard",
-        )
-    )
-    return flagged, (bands_new, sh_new, cand)
 
 
 def connected_components(
@@ -1313,24 +1188,17 @@ def incremental_hamming_dedup(
     same — is flagged against the persisted hash index of every EARLIER
     batch and then appended to it. ONE index engine serves both
     modalities, the same way ``simhash_pairs`` verifies both one-shot.
+    The batch-stamped contract is the shared one in
+    :mod:`operators._store_step`.
 
-    Same store contract as :func:`incremental_minhash_dedup` /
-    ``similarity.incremental_ivf_update``: the index lives under
-    ``store_dir/hashes/batch_id=N`` (one 64-char hash row per item —
-    tiny: the index for a billion images is ~70 GB of strings, scanned
-    but NEVER shuffled); candidates come from the 4 × 16-bit chunk
-    blocks (batch side broadcast) batch-vs-earlier plus within-batch
-    (earlier = smaller id); hamming is verified with packed XOR +
-    bit_count on candidates only; each new item's best earlier match
-    (min hamming, ties to the smallest id) lands in
-    ``store_dir/flagged/batch_id=N``. Writes overwrite only this
-    batch's partitions, reads prune to ``batch_id < N`` at planning
-    time — idempotent under redelivery, batching-invariant (chunk keys
-    and hamming are per-pair deterministic; union of flags ≡ the
-    one-shot :func:`simhash_pairs` derivation, pytest-pinned).
-
-    Returns the flagged rows (id, dup_of, hamming) read back from the
-    flag store.
+    The index is ``store_dir/hashes`` (one 64-char hash row per item —
+    tiny: the index for a billion images is ~70 GB of strings).
+    Candidates share one of the ``n_chunks`` chunk blocks; hamming is
+    verified with packed XOR + bit_count on candidates only; each new
+    item keeps its best earlier match (min hamming, ties to the
+    smallest id) as (id, dup_of, hamming). The union of flags over
+    in-order batches ≡ the one-shot :func:`simhash_pairs` derivation
+    (pytest-pinned).
 
     ``n_chunks`` is the recall-guarantee knob (see
     :func:`_simhash_chunk_rows`): the store holds RAW 64-bit hashes and
@@ -1347,87 +1215,68 @@ def incremental_hamming_dedup(
     mix instead (:func:`check_store_algo`). ``curate_corpus`` and the
     streaming runner always stamp; direct callers that skip it keep
     the unstamped contract and own the era risk."""
-    spark = new_hashed.sparkSession
-    from crypto_data_pipeline_with_kafka_spark.sources.sinks import target_exists
+    return run_store_step(
+        new_hashed.sparkSession,
+        _hamming_family(
+            new_hashed, id_col=id_col, max_hamming=max_hamming,
+            n_chunks=n_chunks, algo=algo,
+        ),
+        store_dir,
+        batch_id,
+    )
 
-    hashes_path = f"{store_dir}/hashes"
-    if algo is not None:
-        check_store_algo(spark, store_dir, hashes_path, algo)
-    hashes_new = new_hashed.select(F.col(id_col), "simhash").persist()
 
-    def read_earlier(keep_batch: bool = False) -> DataFrame:
-        df = spark.read.parquet(hashes_path).filter(F.col("batch_id") < batch_id)
-        return df if keep_batch else df.drop("batch_id")
+def _hamming_family(
+    new_hashed: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    max_hamming: int = 6,
+    n_chunks: int = 4,
+    algo: str | None = None,
+) -> StoreFamily:
+    def chunks(hashes: DataFrame, side: str) -> DataFrame:
+        return _simhash_chunk_rows(hashes, id_col, n_chunks).select(
+            F.col(id_col).alias(side), "c", "key"
+        )
 
-    chunks_new = _simhash_chunk_rows(hashes_new, id_col, n_chunks)
-    new_a = chunks_new.select(F.col(id_col).alias("id_a"), "c", "key")
-    new_b = chunks_new.select(F.col(id_col).alias("id_b"), "c", "key")
-    cand = (
-        new_a.join(F.broadcast(new_b), ["c", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    have_store = target_exists(spark, hashes_path)
-    if have_store:
-        old_a = _simhash_chunk_rows(read_earlier(), id_col, n_chunks).select(
-            F.col(id_col).alias("id_a"), "c", "key"
+    def featurize(pin) -> StoreBatch:
+        hashes_new = pin(new_hashed.select(F.col(id_col), "simhash"))
+        return StoreBatch(
+            index=(hashes_new,),
+            base=hashes_new,
+            a=chunks(hashes_new, "id_a"),
+            b=chunks(hashes_new, "id_b"),
         )
-        cand = cand.unionByName(
-            old_a.join(F.broadcast(new_b), ["c", "key"])
-            # an id re-ingested in a later batch meets its indexed self
-            # here (hamming 0) — never flag a row as its own duplicate
-            .filter(F.col("id_a") != F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-    cand = cand.distinct()
 
-    packed_all = _packed_simhash_words(hashes_new, id_col)
-    if have_store:
-        # verify reads ONLY candidate ids' hashes from the index
-        # (left-semi key-pruned; no forced broadcast on the
-        # collision-bounded candidate list — AQE decides). A
-        # re-ingested id is anti-joined out of the earlier side: its
-        # CURRENT hash (this batch) is authoritative, and keeping the
-        # stored one too would let the min-hamming flag verify a pair
-        # against the stale hash.
-        ids_a = cand.select(F.col("id_a").alias(id_col)).distinct()
-        earlier_latest = (
-            read_earlier(keep_batch=True)
-            .join(ids_a, id_col, "left_semi")
-            .join(hashes_new.select(id_col), id_col, "left_anti")
-            # an id re-ingested across EARLIER batches has one stored
-            # row per ingest; latest batch wins (candidate-bounded agg
-            # — this never touches the unpruned index)
-            .groupBy(id_col)
-            .agg(F.max_by("simhash", "batch_id").alias("simhash"))
+    def verify(cand: DataFrame, hashes: DataFrame) -> DataFrame:
+        packed = _packed_simhash_words(hashes, id_col)
+        sa = packed.select(
+            F.col(id_col).alias("id_a"), F.col("w1").alias("a1"), F.col("w2").alias("a2")
         )
-        packed_all = packed_all.unionByName(
-            _packed_simhash_words(earlier_latest, id_col)
+        sb = packed.select(
+            F.col(id_col).alias("id_b"), F.col("w1").alias("b1"), F.col("w2").alias("b2")
         )
-    sa = packed_all.select(
-        F.col(id_col).alias("id_a"), F.col("w1").alias("a1"), F.col("w2").alias("a2")
+        ham = F.expr("bit_count(a1 ^ b1) + bit_count(a2 ^ b2)").cast("int")
+        return (
+            cand.join(sa, "id_a")
+            .join(sb, "id_b")
+            .withColumn("hamming", ham)
+            .filter(F.col("hamming") <= max_hamming)
+        )
+
+    return StoreFamily(
+        id_col=id_col,
+        tables=("hashes",),
+        base_table="hashes",
+        keys=("c", "key"),
+        featurize=featurize,
+        earlier_keys=lambda e: chunks(e, "id_a"),
+        verify=verify,
+        score="hamming",
+        descending=False,
+        match_col="dup_of",
+        algo=algo,
     )
-    sb = packed_all.select(
-        F.col(id_col).alias("id_b"), F.col("w1").alias("b1"), F.col("w2").alias("b2")
-    )
-    ham = F.expr("bit_count(a1 ^ b1) + bit_count(a2 ^ b2)").cast("int")
-    dup_pairs = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    w = Window.partitionBy("id_b").orderBy(F.col("hamming").asc(), F.col("id_a").asc())
-    flagged = (
-        dup_pairs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(F.col("id_b").alias(id_col), F.col("id_a").alias("dup_of"), "hamming")
-    )
-    flagged_path = f"{store_dir}/flagged/batch_id={batch_id}"
-    flagged.write.mode("overwrite").parquet(flagged_path)
-    hashes_new.write.mode("overwrite").parquet(f"{hashes_path}/batch_id={batch_id}")
-    hashes_new.unpersist()
-    return spark.read.parquet(flagged_path)
 
 
 # ------------------------------------------------------------- winnowing
@@ -1540,123 +1389,6 @@ def winnowing_pairs(
     return out
 
 
-def check_store_batch_monotonic(spark, table_path: str, batch_id: int) -> None:
-    """Refuse a DECREASING batch id against an incremental store table
-    partitioned by ``batch_id``: re-running the store's NEWEST id is
-    the legitimate redelivery/crash-recovery rewrite (== max allowed),
-    but an id BELOW the newest silently overwrites an older run's
-    partition while newer runs' postings keep matching the dead
-    content — corruption, not idempotence. The newest batch comes from
-    the PARTITION LISTING (metadata only — no Spark job, no store
-    scan); connect sessions (no py4j) fall back to the one-column read.
-
-    Enforced inside :func:`incremental_winnowing_dedup` so every
-    caller gets it (r8 advice — it was previously a curate_corpus
-    call-site check only). The minhash/hamming/IVF siblings document
-    tolerated out-of-order ARRIVAL (flag orientation follows arrival
-    order), so the hard refusal is not wired there."""
-    from crypto_data_pipeline_with_kafka_spark.sources.sinks import target_exists
-
-    if not target_exists(spark, table_path):
-        return
-    jvm = getattr(spark, "_jvm", None)
-    if jvm is not None:
-        from crypto_data_pipeline_with_kafka_spark.warehouse import _HadoopFs
-
-        names = [
-            st.getPath().getName()
-            for st in _HadoopFs(spark, table_path).list_status(table_path)
-        ]
-        ids = [
-            int(n.split("=", 1)[1])
-            for n in names
-            if n.startswith("batch_id=")
-        ]
-        max_existing = max(ids) if ids else None
-    else:
-        max_existing = (
-            spark.read.parquet(table_path).agg(F.max("batch_id")).first()[0]
-        )
-    if max_existing is not None and batch_id < max_existing:
-        raise ValueError(
-            f"batch_id {batch_id} < the store's newest batch "
-            f"{max_existing} at {table_path}: batch ids must not "
-            "decrease — reusing an old id overwrites that run's "
-            "partition (re-running the LATEST id is fine; that is the "
-            "redelivery contract)"
-        )
-
-
-def check_store_algo(
-    spark, store_dir: str, table_path: str, algo: str
-) -> None:
-    """Refuse a fingerprint-ALGORITHM era mix against an incremental
-    store (the manifest ``digest_algo`` idiom applied to the store
-    family): a store's indexed fingerprints are only comparable to a
-    batch's if both came from the same bit rule with the same
-    fingerprint-shaping parameters — after an algorithm change (e.g.
-    the r8 audio silence-trim) the identical content hashes
-    differently, so near-dups are silently MISSED rather than erroring.
-    The stamp is a one-row parquet marker at ``store_dir/algo``:
-    written on the store's first stamped batch, required equal on
-    every later one. A NON-EMPTY index with no marker is a
-    pre-versioning-era store — refused too (its era is unknowable;
-    rebuild it, or keep calling without a stamp and own the risk).
-    ``table_path`` is the store's index table (existence = non-empty
-    store)."""
-    from pyspark.errors import AnalysisException
-
-    from crypto_data_pipeline_with_kafka_spark.sources.sinks import target_exists
-
-    marker = f"{store_dir}/algo"
-    # read the marker DIRECTLY and classify the failure (no existence
-    # probe first: under Spark Connect target_exists itself raises on
-    # a crashed-marker dir, before any healing code could run). Absent
-    # path and a dir with no committed rows — the crashed first-stamp
-    # write (only the first stamped batch ever writes it; both
-    # pre-versioning-index paths raise BEFORE writing) — both read as
-    # "no stamp", so redelivery self-heals; anything else (transient
-    # IO, permissions, corrupt footer) PROPAGATES, the target_exists
-    # rule — swallowing it would misread a healthy stamped store as
-    # pre-versioning and tell the operator to rebuild it
-    stored = None
-    try:
-        row = spark.read.parquet(marker).first()
-        stored = row[0] if row is not None else None
-    except AnalysisException as e:
-        from crypto_data_pipeline_with_kafka_spark.sources.sinks import (
-            analysis_error_matches,
-        )
-
-        if not analysis_error_matches(
-            e, "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-        ):
-            raise
-    if stored is not None:
-        if stored != algo:
-            raise ValueError(
-                f"store at {store_dir} holds fingerprints of algorithm "
-                f"era {stored!r} but this batch was hashed with "
-                f"{algo!r}: mixed eras silently MISS near-dups (same "
-                "content, different bits) — rebuild the store under the "
-                "new algorithm, or hash with the stored era's rule"
-            )
-        return
-    if target_exists(spark, table_path):
-        raise ValueError(
-            f"store at {store_dir} has an index but no algorithm stamp "
-            f"(pre-versioning era) while this batch declares {algo!r}: "
-            "the stored fingerprints' era is unknowable — rebuild the "
-            "store under the new stamp (only direct hamming callers, "
-            "which expose algo=, can instead keep the unstamped "
-            "contract; the winnow store and curate_corpus gates always "
-            "stamp)"
-        )
-    spark.createDataFrame([(algo,)], "algo string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(marker)
-
-
 def incremental_winnowing_dedup(
     new_docs: DataFrame,
     store_dir: str,
@@ -1676,7 +1408,10 @@ def incremental_winnowing_dedup(
     store family (minhash = whole-doc sets, hamming = simhash/aHash/
     audio fingerprints, IVF = dense vectors; this one catches a copied
     SPAN of ≥ window+k−1 tokens embedded in otherwise-new text, which
-    none of the others can).
+    none of the others can). The batch-stamped contract is the shared
+    one in :mod:`operators._store_step`; this store also refuses a
+    decreasing batch id (``check_store_batch_monotonic``) and stamps
+    its (k, window) era.
 
     ``widen=False`` for derived (non-scan) batch inputs — the
     widen_if_narrow caller contract. ``broadcast_batch=False`` when the
@@ -1685,173 +1420,97 @@ def incremental_winnowing_dedup(
     the right plan ONLY under the streaming contract's structurally
     small batches; with it off, AQE picks the join strategy.
 
-    The index is ONE parquet table ``store_dir/fps`` (id, fp — the
-    winnowing fingerprints) partitioned by ``batch_id``. Per call:
-    fingerprint the batch; candidates = within-batch inverted-index
-    pairs plus earlier-postings-vs-batch pairs (under the streaming
-    contract the index is scanned and never shuffled — pruned by the
-    broadcast batch postings; with ``broadcast_batch=False`` nothing
-    is force-broadcast and AQE plans the prune/pairing joins, safe at
-    any batch size); verify = shared-fingerprint count
-    over LATEST-version postings only, with the boilerplate
-    ``max_doc_freq`` guard computed over those same latest postings
-    (candidate generation guarantees every earlier holder of a batch
-    fingerprint is a candidate, so the per-batch document frequency is
-    the true as-of-arrival frequency, not a sample); flag each new
-    doc's best earlier overlap (max shared, ties to the smallest id)
-    to ``flagged/batch_id=N``; index the batch's fingerprints under
-    their own partition.
-
-    Same contracts as the sibling stores, pytest-pinned: idempotent
-    overwrite of this batch's partitions with planning-time
-    ``batch_id < N`` pruning (redelivery-safe); a re-ingested id never
-    self-flags and its LATEST content is what every shared count reads
-    (stale versions are candidate bait only — verification excludes
-    them); with ``max_doc_freq=None`` the union of incremental flags
-    over in-order batches equals the one-shot
-    :func:`winnowing_pairs` derivation oriented best-earlier-per-later
-    (fingerprints are per-doc deterministic, so WHEN a pair's members
-    arrive cannot change its shared count). The df cap itself is
-    as-of-arrival by construction — a fingerprint that only becomes
-    boilerplate later cannot retroactively un-flag an earlier catch.
-
-    Returns the flagged rows (id, overlap_of, shared) read back from
-    the flag store."""
-    spark = new_docs.sparkSession
-    # local import: sources.sinks ← operators would be circular the other way
-    from crypto_data_pipeline_with_kafka_spark.sources.sinks import target_exists
-
-    fps_path = f"{store_dir}/fps"
-    # every caller gets the non-decreasing-batch-id refusal (not just
-    # curate_corpus): a decreasing id is partition corruption, and the
-    # check is metadata-only — see check_store_batch_monotonic
-    check_store_batch_monotonic(spark, fps_path, batch_id)
-    # SELF-stamped fingerprint era (r8): k/window shape the
-    # fingerprints themselves, so a store built at one (k, window) is
-    # silently incomparable to batches fingerprinted at another —
-    # near-dups would be missed, not erred; min_shared/max_doc_freq
-    # are read-side knobs and stay free per batch
-    check_store_algo(
-        spark, store_dir, fps_path, f"winnow/k={k}/window={window}"
+    The index is ``store_dir/fps`` (id, fp — the winnowing
+    fingerprints). Candidates share a fingerprint; verify is the
+    shared-fingerprint count over latest-version postings, with the
+    boilerplate ``max_doc_freq`` guard computed over those same
+    postings (every earlier holder of a batch fingerprint is a
+    candidate, so the per-batch document frequency is the true
+    as-of-arrival frequency, not a sample); each new doc keeps its best
+    earlier overlap (max shared, ties to the smallest id) as (id,
+    overlap_of, shared). With ``max_doc_freq=None`` the union of flags
+    over in-order batches equals the one-shot :func:`winnowing_pairs`
+    derivation oriented best-earlier-per-later (pytest-pinned). The df
+    cap is as-of-arrival by construction — a fingerprint that only
+    becomes boilerplate later cannot retroactively un-flag an earlier
+    catch."""
+    return run_store_step(
+        new_docs.sparkSession,
+        _winnowing_family(
+            new_docs, text_col=text_col, id_col=id_col, k=k, window=window,
+            min_shared=min_shared, max_doc_freq=max_doc_freq, widen=widen,
+            broadcast_batch=broadcast_batch,
+        ),
+        store_dir,
+        batch_id,
     )
-    fps_new = winnowing_fingerprints(
-        new_docs, k=k, window=window, text_col=text_col, id_col=id_col,
-        widen=widen,
-    ).persist()
 
-    def read_earlier(keep_batch: bool = False) -> DataFrame:
-        # batch_id is a partition directory: pruned at planning time,
-        # so a redelivered/half-written current batch is never scanned
-        df = spark.read.parquet(fps_path).filter(F.col("batch_id") < batch_id)
-        return df if keep_batch else df.drop("batch_id")
 
-    # candidate generation runs fps pre-capped by the BATCH document
-    # frequency: batch df lower-bounds the as-of-arrival df the verify
-    # stage caps on, so any fp capped here is certainly pruned there —
-    # and a pair sharing ONLY capped fps can never reach min_shared.
-    # This is winnowing_pairs' stop-shingle bound on join blowup (a
-    # boilerplate span shared by d batch docs would otherwise emit
-    # O(d²) candidates before the verify-time cap saw it).
-    cand_fps = fps_new
-    if max_doc_freq is not None:
-        w_bdf = Window.partitionBy("fp")
-        # persisted: the df-cap window shuffle would otherwise re-run
-        # for each of its three consumers (both in-batch join sides
-        # plus the store join)
-        cand_fps = (
-            fps_new.withColumn("_df", F.count(F.lit(1)).over(w_bdf))
-            .filter(F.col("_df") <= max_doc_freq)
-            .drop("_df")
-            .persist()
-        )
-    new_b = cand_fps.select(F.col(id_col).alias("id_b"), "fp")
-    maybe_bcast = F.broadcast if broadcast_batch else (lambda df: df)
-    new_a = cand_fps.select(F.col(id_col).alias("id_a"), "fp")
-    cand = (
-        new_a.join(maybe_bcast(new_b), "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    have_store = target_exists(spark, fps_path)
-    if have_store:
-        old_a = read_earlier().select(F.col(id_col).alias("id_a"), "fp")
-        if broadcast_batch:
-            # the broadcast inner join on fp against the batch postings
-            # IS the index prune — the store is scanned, never shuffled
-            old_hits = old_a.join(F.broadcast(new_b), "fp")
-        else:
-            # run-sized batch: nothing here is structurally bounded —
-            # postings are run-sized and even the distinct-fp set only
-            # trails them by the df-cap factor, so NOTHING is force-
-            # broadcast. The left-semi on the distinct fps still prunes
-            # the store before the wider pairing join, and AQE
-            # broadcasts either side at runtime whenever it actually is
-            # small (the common case), degrading to a safe shuffle —
-            # never a driver OOM — when it is not.
-            old_hits = old_a.join(
-                cand_fps.select("fp").distinct(), "fp", "left_semi"
-            ).join(new_b, "fp")
-        cand = cand.unionByName(
-            # an id re-ingested in a later batch meets its indexed self
-            # here — never flag a row as its own overlap
-            old_hits.filter(F.col("id_a") != F.col("id_b")).select(
-                "id_a", "id_b"
-            )
-        )
-    cand = cand.distinct().persist()
-
-    # verify base: the batch plus ONLY candidate earlier ids' LATEST
-    # fingerprints (left-semi key-pruned store read — O(candidates),
-    # not O(index); no forced broadcast on the collision-bounded
-    # candidate list, AQE decides — the minhash store's skew reasoning)
-    fp_all = fps_new
-    if have_store:
-        new_ids = fps_new.select(id_col).distinct()
-        ids_a = cand.select(F.col("id_a").alias(id_col)).distinct()
-        latest = (
-            read_earlier(keep_batch=True)
-            .join(ids_a, id_col, "left_semi")
-            .join(new_ids, id_col, "left_anti")
-            .groupBy(id_col)
-            .agg(F.max("batch_id").alias("batch_id"))
-        )
-        fp_all = fps_new.unionByName(
-            read_earlier(keep_batch=True)
-            .join(latest, [id_col, "batch_id"], "left_semi")
-            .drop("batch_id")
-        )
-    if max_doc_freq is not None:
-        w_df = Window.partitionBy("fp")
-        fp_all = (
-            fp_all.withColumn("_df", F.count(F.lit(1)).over(w_df))
+def _winnowing_family(
+    new_docs: DataFrame,
+    *,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 5,
+    window: int = 4,
+    min_shared: int = 2,
+    max_doc_freq: int | None = 8,
+    widen: bool = True,
+    broadcast_batch: bool = True,
+) -> StoreFamily:
+    def cap(fps: DataFrame) -> DataFrame:
+        if max_doc_freq is None:
+            return fps
+        return (
+            fps.withColumn("_df", F.count(F.lit(1)).over(Window.partitionBy("fp")))
             .filter(F.col("_df") <= max_doc_freq)
             .drop("_df")
         )
-    shared = (
-        cand.join(fp_all.select(F.col(id_col).alias("id_a"), "fp"), "id_a")
-        .join(fp_all.select(F.col(id_col).alias("id_b"), "fp"), ["id_b", "fp"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
-    w = Window.partitionBy("id_b").orderBy(
-        F.col("shared").desc(), F.col("id_a").asc()
-    )
-    flagged = (
-        shared.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("id_b").alias(id_col),
-            F.col("id_a").alias("overlap_of"),
-            "shared",
+
+    def featurize(pin) -> StoreBatch:
+        fps_new = pin(winnowing_fingerprints(
+            new_docs, k=k, window=window, text_col=text_col, id_col=id_col,
+            widen=widen,
+        ))
+        # candidates come from fps pre-capped by the BATCH document
+        # frequency: batch df lower-bounds the as-of-arrival df the
+        # verify cap uses, so a pair sharing ONLY capped fps can never
+        # reach min_shared — winnowing_pairs' stop-shingle bound on the
+        # O(d²) blowup of a boilerplate span. Pinned: three consumers
+        # (both within-batch sides and the store join).
+        cand_fps = pin(cap(fps_new)) if max_doc_freq is not None else fps_new
+        return StoreBatch(
+            index=(fps_new,),
+            base=fps_new,
+            a=cand_fps.select(F.col(id_col).alias("id_a"), "fp"),
+            b=cand_fps.select(F.col(id_col).alias("id_b"), "fp"),
         )
+
+    def verify(cand: DataFrame, fps: DataFrame) -> DataFrame:
+        fps = cap(fps)
+        return (
+            cand.join(fps.select(F.col(id_col).alias("id_a"), "fp"), "id_a")
+            .join(fps.select(F.col(id_col).alias("id_b"), "fp"), ["id_b", "fp"])
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("shared"))
+            .filter(F.col("shared") >= min_shared)
+        )
+
+    return StoreFamily(
+        id_col=id_col,
+        tables=("fps",),
+        base_table="fps",
+        keys=("fp",),
+        featurize=featurize,
+        earlier_keys=lambda e: e.select(F.col(id_col).alias("id_a"), "fp"),
+        verify=verify,
+        score="shared",
+        descending=True,
+        match_col="overlap_of",
+        algo=f"winnow/k={k}/window={window}",
+        monotonic=True,
+        broadcast_batch=broadcast_batch,
     )
-    flagged_path = f"{store_dir}/flagged/batch_id={batch_id}"
-    flagged.write.mode("overwrite").parquet(flagged_path)
-    fps_new.write.mode("overwrite").parquet(f"{fps_path}/batch_id={batch_id}")
-    for df in (fps_new, cand_fps, cand):
-        df.unpersist()
-    return spark.read.parquet(flagged_path)
 
 
 #: Lee et al. 2022's production operating point: ExactSubstr removes

@@ -4,8 +4,14 @@ similarity module in r11 (mechanical move, no behavior change)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from crypto_data_pipeline_with_kafka_spark.operators._store_step import (
+    StoreBatch,
+    StoreFamily,
+    run_store_step,
+)
 
 from crypto_data_pipeline_with_kafka_spark.operators.similarity.base import (
     cosine_for_pairs,
@@ -105,22 +111,15 @@ def incremental_ivf_update(
     vectors (id, vec), the standard IVF payload, partitioned so a
     cell's list is one directory read.
 
-    Per batch: assign the batch to its primary cells (broadcast O(C)
+    Per batch: assign the batch to its cells (broadcast O(C)
     centroids, in-row top-1 — zero shuffles, see ``ivf_assignments``);
-    candidates = same-cell pairs, batch-vs-earlier (index scanned,
-    batch side broadcast — the index is NEVER shuffled) plus
-    within-batch (earlier = smaller id); exact-cosine verify on
-    candidates only; flag each new vector's best earlier match
-    (max cosine ≥ ``min_cosine``, ties to the smallest id). Writes
-    OVERWRITE only this batch's own partitions and every index read
-    prunes to ``batch_id < batch_id`` at planning time, so the step is
-    idempotent under foreachBatch redelivery and crash-safe — the same
-    contract (and the same batching-invariance argument) as the
-    minhash store: cell assignment and pairwise cosine are per-row /
-    per-pair deterministic, so WHEN a pair's members arrive doesn't
-    change whether it is flagged, and the union of incremental flags
-    equals the one-shot ``ivf_ann_pairs`` derivation at probes=1
-    (pytest-pinned).
+    candidates are same-cell pairs; exact cosine verifies candidates
+    only; each new vector keeps its best earlier match (max cosine ≥
+    ``min_cosine``, ties to the smallest id). The batch-stamped
+    contract — per-batch overwrites, ``batch_id < N`` pruning,
+    latest-wins re-ingest, flags read back — is the shared one in
+    :mod:`operators._store_step`; the union of flags equals the
+    one-shot ``ivf_ann_pairs`` derivation at probes=1 (pytest-pinned).
 
     ``pq_codebooks`` opts the store into the IVF-PQ serve layout: the
     codebooks (a ``pq_train`` output — train them ONCE over a bootstrap
@@ -141,7 +140,6 @@ def incremental_ivf_update(
     from crypto_data_pipeline_with_kafka_spark.sources.sinks import target_exists
 
     cpath = f"{store_dir}/centroids"
-    cells_path = f"{store_dir}/cells"
     books_path = f"{store_dir}/pq_codebooks"
     if centroids is not None:
         centroids.write.mode("overwrite").parquet(cpath)
@@ -186,144 +184,101 @@ def incremental_ivf_update(
             .withColumn("cosine", F.lit(None).cast("double"))
             .limit(0)
         )
-
-    base_new = with_dbl_and_approx_norm(
-        new_vectors.select(F.col(id_col).alias("vec_id"), vec_col),
-        "vec_id",
-        vec_col,
-    ).persist()
-    assign_new = ivf_assignments(
-        base_new,
-        probes=probes,
-        id_col="vec_id",
-        vec_col="vdbl",
-        centroids=cents,
-        with_rank=True,
-    ).persist()
-    primary_new = assign_new.filter(F.col("probe_rank") == 1)
-
-    def read_earlier(keep_batch: bool = False) -> DataFrame:
-        # batch_id is a partition dir: pruned at planning time, so a
-        # redelivered/half-written current batch is never scanned
-        df = (
-            spark.read.parquet(cells_path)
-            .filter(F.col("batch_id") < batch_id)
-            .withColumn("centroid_id", F.col("centroid_id").cast("int"))
-        )
-        return df if keep_batch else df.drop("batch_id")
-
-    # earlier side (id_a) sits at its PRIMARY cell; the arriving side
-    # (id_b) brings all its probe cells — the asymmetric serve rule
-    new_a = primary_new.select(F.col("vec_id").alias("id_a"), "centroid_id")
-    new_b = assign_new.select(F.col("vec_id").alias("id_b"), "centroid_id")
-    cand = (
-        new_a.join(F.broadcast(new_b), "centroid_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+    return run_store_step(
+        spark,
+        _ivf_family(
+            new_vectors, cents, books, id_col=id_col, vec_col=vec_col,
+            min_cosine=min_cosine, probes=probes,
+        ),
+        store_dir,
+        batch_id,
     )
-    have_store = target_exists(spark, cells_path)
-    if have_store:
-        old_a = read_earlier().select(F.col("vec_id").alias("id_a"), "centroid_id")
-        cand = cand.unionByName(
-            old_a.join(F.broadcast(new_b), "centroid_id")
-            # an id re-ingested in a later batch meets its indexed self
-            # here — never flag a row as its own duplicate
-            .filter(F.col("id_a") != F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-    cand = cand.distinct().persist()
 
-    # verify base: the batch plus ONLY the candidate earlier vectors
-    # (left-semi key-pruned store read — O(candidates), not O(index));
-    # no forced broadcast on the collision-bounded candidate list (AQE
-    # decides), mirroring the minhash store's skew reasoning.
-    base_all = base_new
-    if have_store:
-        # a re-ingested id's CURRENT vector (this batch) is
-        # authoritative — anti-join its stored earlier vector out so
-        # the cosine verify never runs against the stale one
-        ids_a = cand.select(F.col("id_a").alias("vec_id")).distinct()
-        old_vecs = (
-            read_earlier(keep_batch=True)
-            .drop("centroid_id")
-            .join(ids_a, "vec_id", "left_semi")
-            .join(base_new.select("vec_id"), "vec_id", "left_anti")
-            # an id re-ingested across EARLIER batches has one stored
-            # row per ingest; latest batch wins (candidate-bounded agg)
-            .groupBy("vec_id")
-            .agg(F.max_by(vec_col, "batch_id").alias(vec_col))
+
+def _ivf_family(
+    new_vectors: DataFrame,
+    cents: DataFrame,
+    books: DataFrame | None,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    min_cosine: float = 0.8,
+    probes: int = 1,
+) -> StoreFamily:
+    vecs = new_vectors.select(F.col(id_col).alias("vec_id"), vec_col)
+
+    def featurize(pin) -> StoreBatch:
+        base_new = pin(with_dbl_and_approx_norm(vecs, "vec_id", vec_col))
+        assign_new = pin(ivf_assignments(
+            base_new,
+            probes=probes,
+            id_col="vec_id",
+            vec_col="vdbl",
+            centroids=cents,
+            with_rank=True,
+        ))
+        primary = assign_new.filter(F.col("probe_rank") == 1).select(
+            "vec_id", "centroid_id"
         )
-        base_all = base_new.unionByName(
-            # widen=False: old_vecs is a derived plan (store read +
-            # left-semi join); the widen probe would materialize those
-            # stages under AQE just to count partitions
-            with_dbl_and_approx_norm(old_vecs, "vec_id", vec_col, widen=False)
-        )
-    dup_pairs = cosine_for_pairs(
-        base_all, cand, min_cosine=min_cosine, exact_norms_in_base=False
-    )
-    w = Window.partitionBy("id_b").orderBy(
-        F.col("cosine").desc(), F.col("id_a").asc()
-    )
-    flagged = (
-        dup_pairs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("id_b").alias("vec_id"),
-            F.col("id_a").alias("match_id"),
-            "cosine",
-        )
-    )
-    flagged_path = f"{store_dir}/flagged/batch_id={batch_id}"
-    flagged.write.mode("overwrite").parquet(flagged_path)
-    # the index stores ONE row per vector — its primary cell — at any
-    # probes setting (multi-probe is a read-side recall knob only)
-    cells_new = new_vectors.select(
-        F.col(id_col).alias("vec_id"), vec_col
-    ).join(primary_new.select("vec_id", "centroid_id"), "vec_id")
-    if books is not None:
-        # PQ-encode in the same pass (in-row math against the broadcast
-        # packed codebooks — no extra shuffle joins the codes in before
-        # the layout write). Residual-tagged books (pq_train_residual)
-        # switch the encoded quantity to x − c(x) against each row's
-        # PRIMARY cell — the IVFADC store layout; retrain_ivf_store
-        # re-encodes these codes against its new geometry.
-        if "residual" in books.columns:
-            enc_src = (
-                new_vectors.select(F.col(id_col).alias("vec_id"), vec_col)
-                .join(primary_new.select("vec_id", "centroid_id"), "vec_id")
-                .join(
+        # the index stores ONE row per vector — its primary cell — at
+        # any probes setting (multi-probe is a read-side recall knob)
+        cells_new = vecs.join(primary, "vec_id")
+        if books is not None:
+            # PQ-encode in the same pass (in-row math against the
+            # broadcast packed codebooks). Residual-tagged books
+            # (pq_train_residual) encode x − c(x) against each row's
+            # PRIMARY cell — the IVFADC store layout; retrain_ivf_store
+            # re-encodes these codes against its new geometry.
+            if "residual" in books.columns:
+                enc_src = cells_new.join(
                     F.broadcast(
-                        cents.select(
-                            "centroid_id", F.col("cvec").alias("_cvec")
-                        )
+                        cents.select("centroid_id", F.col("cvec").alias("_cvec"))
                     ),
                     "centroid_id",
-                )
-                .select(
+                ).select(
                     "vec_id",
                     F.zip_with(
                         dbl_vector(vec_col), "_cvec", lambda a, b: a - b
                     ).alias("_rvec"),
                 )
-            )
-            codes_new = pq_encode(enc_src, books, id_col="vec_id", vec_col="_rvec")
-        else:
-            codes_new = pq_encode(
-                new_vectors.select(F.col(id_col).alias("vec_id"), vec_col),
-                books,
-                id_col="vec_id",
-                vec_col=vec_col,
-            )
-        cells_new = cells_new.join(codes_new, "vec_id")
-    (
-        cells_new.write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(f"{cells_path}/batch_id={batch_id}")
+                codes_new = pq_encode(enc_src, books, id_col="vec_id", vec_col="_rvec")
+            else:
+                codes_new = pq_encode(vecs, books, id_col="vec_id", vec_col=vec_col)
+            cells_new = cells_new.join(codes_new, "vec_id")
+        # earlier side (id_a) sits at its PRIMARY cell; the arriving
+        # side (id_b) brings all its probe cells — the asymmetric serve
+        # rule: a pair is examined iff the later side's probe set holds
+        # the earlier side's primary cell
+        return StoreBatch(
+            index=(cells_new,),
+            base=base_new,
+            a=primary.select(F.col("vec_id").alias("id_a"), "centroid_id"),
+            b=assign_new.select(F.col("vec_id").alias("id_b"), "centroid_id"),
+        )
+
+    return StoreFamily(
+        id_col="vec_id",
+        tables=("cells",),
+        base_table="cells",
+        keys=("centroid_id",),
+        featurize=featurize,
+        earlier_keys=lambda e: e.select(
+            F.col("vec_id").alias("id_a"), F.col("centroid_id").cast("int")
+        ),
+        # widen=False: a derived plan (store read + key-pruning joins);
+        # the widen probe would materialize those stages just to count
+        # partitions
+        earlier_base=lambda rows: with_dbl_and_approx_norm(
+            rows.select("vec_id", vec_col), "vec_id", vec_col, widen=False
+        ),
+        verify=lambda cand, base: cosine_for_pairs(
+            base, cand, min_cosine=min_cosine, exact_norms_in_base=False
+        ),
+        score="cosine",
+        descending=True,
+        match_col="match_id",
+        sub_partitions=("centroid_id",),
     )
-    for df in (base_new, assign_new, cand):
-        df.unpersist()
-    return spark.read.parquet(flagged_path)
 
 
 def _cells_vec_col(stored: DataFrame) -> str:
@@ -467,36 +422,27 @@ def retrain_ivf_store(
     flags are cosine-VERIFIED verdicts, valid under any geometry —
     re-training changes future candidate recall, never past truths.
 
-    Swap protocol — the ``compact_partitions`` backup-rename discipline
-    extended with a COMMIT MARKER, because this swap covers TWO
-    directories whose geometries must stay consistent: both new tables
-    are staged by distributed writes first, then ``.retrain_commit`` is
-    created (the point of no return — it asserts both staged tables are
-    complete), then four renames + two deletes, then the marker is
-    removed. Recovery (:func:`recover_ivf_store`, run automatically at
-    the start of every retrain) rolls FORWARD to the new geometry when
-    the marker exists — a crash between the cells swap and the
-    centroids swap can therefore never be 'repaired' into a
-    mixed-geometry store — and treats marker-less staged dirs as
-    incomplete writes to sweep. Run retraining when no updater races
-    it — the streaming runner's contract is stop stream → retrain →
-    restart (``streaming.pipeline.run_incremental_ivf_stream``)."""
+    Swap protocol: both new tables are staged by distributed writes,
+    then swapped in together by ``warehouse._HadoopFs.swap`` — the
+    ``compact_partitions`` backup-rename swap, which adds a
+    ``.retrain_commit`` marker because two directories swap. Recovery
+    (:func:`recover_ivf_store`, run automatically at the start of every
+    retrain) rolls FORWARD to the new geometry when the marker exists,
+    so a crash between the cells swap and the centroids swap can never
+    be 'repaired' into a mixed-geometry store; marker-less staged dirs
+    are incomplete writes to sweep. Run retraining when no updater
+    races it — the streaming runner's contract is stop stream →
+    retrain → restart (``streaming.pipeline.run_incremental_ivf_stream``)."""
     # local import: warehouse is a peer package module; it imports
     # nothing from operators, so this cannot cycle
     from crypto_data_pipeline_with_kafka_spark.warehouse import _HadoopFs
 
     cells_path = f"{store_dir}/cells"
-    cents_path = f"{store_dir}/centroids"
     recover_ivf_store(spark, store_dir)
     if only_if_needed and not ivf_store_needs_retrain(spark, store_dir, factor):
         return None
-
-    hfs = _HadoopFs(spark, store_dir)
-    staged_cells = f"{store_dir}/.retrain_cells"
-    staged_cents = f"{store_dir}/.retrain_centroids"
-    backup_cells = f"{store_dir}/.retrain_backup_cells"
-    backup_cents = f"{store_dir}/.retrain_backup_centroids"
-
+    _, staged_cells, _ = _HadoopFs.swap_paths(store_dir, "cells", _RETRAIN_TAG)
+    _, staged_cents, _ = _HadoopFs.swap_paths(store_dir, "centroids", _RETRAIN_TAG)
     from crypto_data_pipeline_with_kafka_spark.sources.sinks import target_exists
 
     stored = spark.read.parquet(cells_path)
@@ -588,23 +534,18 @@ def retrain_ivf_store(
     )
     cents.write.mode("overwrite").parquet(staged_cents)
 
-    # COMMIT POINT: the marker asserts both staged tables are complete
-    # and the swap has begun — recovery rolls FORWARD from here, so a
-    # crash between the two table swaps can never strand mixed geometry
-    hfs.touch(f"{store_dir}/.retrain_commit")
-    hfs.rename(cells_path, backup_cells)
-    hfs.rename(staged_cells, cells_path)
-    hfs.rename(cents_path, backup_cents)
-    hfs.rename(staged_cents, cents_path)
-    hfs.delete(backup_cells)
-    hfs.delete(backup_cents)
-    hfs.delete(f"{store_dir}/.retrain_commit")
+    _HadoopFs(spark, store_dir).swap(store_dir, _RETRAIN_TABLES, _RETRAIN_TAG)
     return c
 
 
+_RETRAIN_TABLES = ("cells", "centroids")
+_RETRAIN_TAG = "retrain"
+
+
 def recover_ivf_store(spark, store_dir: str) -> None:
-    """Crash recovery for an interrupted :func:`retrain_ivf_store`.
-    Two regimes, decided by the ``.retrain_commit`` marker:
+    """Crash recovery for an interrupted :func:`retrain_ivf_store`
+    (``warehouse._HadoopFs.recover_swap``). Two regimes, decided by the
+    ``.retrain_commit`` marker:
 
     * marker PRESENT — both staged tables were complete and the swap
       had begun: roll each table FORWARD (staged → live, sweeping
@@ -622,40 +563,6 @@ def recover_ivf_store(spark, store_dir: str) -> None:
     operator who wants to repair the store without retraining."""
     from crypto_data_pipeline_with_kafka_spark.warehouse import _HadoopFs
 
-    hfs = _HadoopFs(spark, store_dir)
-    marker = f"{store_dir}/.retrain_commit"
-    tables = (
-        (
-            f"{store_dir}/cells",
-            f"{store_dir}/.retrain_cells",
-            f"{store_dir}/.retrain_backup_cells",
-        ),
-        (
-            f"{store_dir}/centroids",
-            f"{store_dir}/.retrain_centroids",
-            f"{store_dir}/.retrain_backup_centroids",
-        ),
+    _HadoopFs(spark, store_dir).recover_swap(
+        store_dir, _RETRAIN_TABLES, _RETRAIN_TAG
     )
-    if hfs.exists(marker):
-        for live, staged, backup in tables:
-            if hfs.exists(staged):
-                # this table's swap had not (fully) happened: advance it
-                if hfs.exists(live):
-                    if hfs.exists(backup):
-                        hfs.delete(backup)
-                    hfs.rename(live, backup)
-                hfs.rename(staged, live)
-            if hfs.exists(backup):
-                hfs.delete(backup)
-        hfs.delete(marker)
-        return
-    for live, staged, backup in tables:
-        if hfs.exists(backup):
-            if hfs.exists(live):
-                hfs.delete(backup)
-            else:
-                hfs.rename(backup, live)
-        if hfs.exists(staged):
-            hfs.delete(staged)
-
-

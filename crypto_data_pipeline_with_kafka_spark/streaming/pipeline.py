@@ -486,6 +486,19 @@ def run_incremental_indicator_stream(
     q.awaitTermination()
 
 
+def _drain_store_stream(stream: DataFrame, step) -> None:
+    """Drain a file-source backlog into an incremental store: each
+    non-empty micro-batch runs ``step(batch, batch_id)`` with the
+    epoch id as the store's batch id, under the availableNow trigger."""
+
+    def handle(batch: DataFrame, epoch_id: int) -> None:
+        if not batch.isEmpty():
+            step(batch, int(epoch_id))
+
+    q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
+    q.awaitTermination()
+
+
 def run_incremental_dedup_stream(
     spark: SparkSession,
     source_path: str,
@@ -512,20 +525,13 @@ def run_incremental_dedup_stream(
     the equivalence test writes files that way). Out-of-order arrival
     still finds every cross-batch duplicate pair — just attributed to
     whichever member arrived later."""
-    stream = documents_stream_reader(spark, source_path, max_files_per_trigger=1)
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        incremental_minhash_dedup(
-            batch.select("doc_id", "text"),
-            store_dir,
-            int(epoch_id),
+    _drain_store_stream(
+        documents_stream_reader(spark, source_path, max_files_per_trigger=1),
+        lambda batch, batch_id: incremental_minhash_dedup(
+            batch.select("doc_id", "text"), store_dir, batch_id,
             min_jaccard=min_jaccard,
-        )
-
-    q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+        ),
+    )
 
 
 def run_incremental_ivf_stream(
@@ -591,19 +597,13 @@ def run_incremental_ivf_stream(
             stacklevel=2,
         )
 
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        incremental_ivf_update(
-            batch.select("vec_id", "embedding"),
-            store_dir,
-            int(epoch_id),
-            min_cosine=min_cosine,
-            probes=probes,
-        )
-
-    q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+    _drain_store_stream(
+        stream,
+        lambda batch, batch_id: incremental_ivf_update(
+            batch.select("vec_id", "embedding"), store_dir, batch_id,
+            min_cosine=min_cosine, probes=probes,
+        ),
+    )
 
 
 def run_incremental_hamming_stream(
@@ -627,11 +627,7 @@ def run_incremental_hamming_stream(
     collisions as dup flags and miss real same-rule pairs after an
     upgrade. Gate a mixed-modality feed with one store per modality,
     the ``curate_corpus`` layout."""
-    stream = documents_stream_reader(spark, source_path, max_files_per_trigger=1)
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def step(batch: DataFrame, batch_id: int) -> None:
         # release the hasher's per-batch word-count cache after the
         # batch's store writes complete — a long-running stream must
         # not accumulate one pinned relation per micro-batch (r15, the
@@ -643,7 +639,7 @@ def run_incremental_hamming_stream(
                     batch.select("doc_id", "text"), caches=batch_caches
                 ),
                 store_dir,
-                int(epoch_id),
+                batch_id,
                 max_hamming=max_hamming,
                 n_chunks=n_chunks,
                 # era stamp: this runner's bits are text SimHash — a
@@ -656,8 +652,10 @@ def run_incremental_hamming_stream(
             for c in batch_caches:
                 c.unpersist()
 
-    q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+    _drain_store_stream(
+        documents_stream_reader(spark, source_path, max_files_per_trigger=1),
+        step,
+    )
 
 
 def run_incremental_winnow_stream(
@@ -682,23 +680,14 @@ def run_incremental_winnow_stream(
         incremental_winnowing_dedup,
     )
 
-    stream = documents_stream_reader(spark, source_path, max_files_per_trigger=1)
-
-    def handle(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        incremental_winnowing_dedup(
-            batch.select("doc_id", "text"),
-            store_dir,
-            int(epoch_id),
-            k=k,
-            window=window,
-            min_shared=min_shared,
+    _drain_store_stream(
+        documents_stream_reader(spark, source_path, max_files_per_trigger=1),
+        lambda batch, batch_id: incremental_winnowing_dedup(
+            batch.select("doc_id", "text"), store_dir, batch_id,
+            k=k, window=window, min_shared=min_shared,
             max_doc_freq=max_doc_freq,
-        )
-
-    q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+        ),
+    )
 
 
 def price_ingestion_stream(spark: SparkSession, source_path: str) -> DataFrame:

@@ -19,6 +19,8 @@ tests on tmp dirs — the driver's fixture files themselves are read-only.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -86,6 +88,73 @@ class _HadoopFs:
         # create() raises on failure (unlike the boolean-returning ops)
         self.fs.create(self.path(p), True).close()
 
+    # Crash-safe directory swap. Plain filesystems have no atomic
+    # directory swap, so each live dir ``root/<name>`` is replaced by
+    # its fully written sibling ``root/.<tag>_<name>`` as
+    # ``live → .<tag>_backup_<name>``, ``staged → live``, then the
+    # backups are deleted. A crash leaves a window of metadata ops that
+    # :meth:`recover_swap` repairs. When more than one directory swaps,
+    # the dirs must land together (e.g. cells and the centroids that
+    # place them), so a commit marker ``root/.<tag>_commit`` is written
+    # before the first rename: with it, recovery rolls every dir
+    # FORWARD; without it, staged dirs are unfinished writes.
+
+    @staticmethod
+    def swap_paths(root: str, name: str, tag: str) -> tuple[str, str, str]:
+        """(live, staged, backup) paths of ``name`` under ``root``."""
+        return (
+            f"{root}/{name}",
+            f"{root}/.{tag}_{name}",
+            f"{root}/.{tag}_backup_{name}",
+        )
+
+    def swap(self, root: str, names: Sequence[str], tag: str) -> None:
+        """Swap each staged dir into its live place (see above)."""
+        marker = f"{root}/.{tag}_commit" if len(names) > 1 else None
+        if marker is not None:
+            # point of no return: every staged dir is complete
+            self.touch(marker)
+        for name in names:
+            live, staged, backup = self.swap_paths(root, name, tag)
+            self.rename(live, backup)
+            self.rename(staged, live)
+        for name in names:
+            self.delete(self.swap_paths(root, name, tag)[2])
+        if marker is not None:
+            self.delete(marker)
+
+    def recover_swap(self, root: str, names: Sequence[str], tag: str) -> None:
+        """Repair a :meth:`swap` interrupted at any point; a no-op on a
+        clean root, so callers run it before every swap."""
+        marker = f"{root}/.{tag}_commit"
+        if len(names) > 1 and self.exists(marker):
+            for name in names:
+                live, staged, backup = self.swap_paths(root, name, tag)
+                if self.exists(staged):
+                    # this dir's swap had not (fully) happened: advance it
+                    if self.exists(live):
+                        if self.exists(backup):
+                            self.delete(backup)
+                        self.rename(live, backup)
+                    self.rename(staged, live)
+                if self.exists(backup):
+                    self.delete(backup)
+            self.delete(marker)
+            return
+        for name in names:
+            live, staged, backup = self.swap_paths(root, name, tag)
+            if self.exists(backup):
+                if self.exists(live):
+                    # crashed after the swap, before the sweep
+                    self.delete(backup)
+                else:
+                    # crashed between the renames: the backup is the
+                    # only copy — restore it
+                    self.rename(backup, live)
+            if self.exists(staged):
+                # unfinished stage: the live dir is intact
+                self.delete(staged)
+
 
 def compact_partitions(
     spark: SparkSession,
@@ -114,17 +183,13 @@ def compact_partitions(
     (``retrain_ivf_store`` IS that store's compaction — its layout
     exchange rewrites every partition to one file).
 
-    Swap protocol (NOT atomic — plain filesystems have no atomic
-    directory swap; this ordering makes the exposure a metadata-op
-    window with automatic recovery): stage the rewrite to a hidden
-    sibling dir, then ``pdir → backup``, ``staged → pdir``, delete
-    backup. Every FS mutation's boolean return is checked (Hadoop
-    signals failure by returning false). A crash between the two
-    renames leaves the partition invisible UNTIL THE NEXT RUN, which
-    detects the orphaned backup and restores it before proceeding; a
-    crash after the second rename leaves only a stale backup to sweep.
-    Concurrent READERS of the store during the window can therefore
-    see the partition briefly absent — run compaction when no
+    Swap protocol: the rewrite is staged to a hidden sibling dir and
+    swapped in with ``_HadoopFs.swap`` (backup-rename, every Hadoop
+    boolean checked); ``_HadoopFs.recover_swap`` runs first on every
+    partition, so a crash at any point is repaired by the next run — a
+    partition whose only copy is an orphaned backup is restored before
+    it is compacted. Concurrent READERS can see a partition briefly
+    absent during the swap window — run compaction when no
     reader/writer races it (the same contract real table formats
     attach to maintenance), and compact ONLY partitions no writer can
     still append to (e.g. dates older than the watermark + late
@@ -143,7 +208,7 @@ def compact_partitions(
 
     hfs = _HadoopFs(spark, path)
     live_prefix = f"{partition_col}="
-    backup_prefix = f".compact_backup_{partition_col}="
+    backup_prefix = _HadoopFs.swap_paths("", live_prefix, "compact")[2][1:]
     if partitions is None:
         # Discovery must ALSO surface partitions whose only copy is an
         # orphaned backup (crash between the two renames left no live
@@ -159,22 +224,9 @@ def compact_partitions(
         partitions = sorted(found)
 
     def compact_one(dt: str) -> int | None:
-        pdir = f"{path}/{partition_col}={dt}"
-        staged = f"{path}/.compact_{partition_col}={dt}"
-        backup = f"{path}/{backup_prefix}{dt}"
-        if hfs.exists(backup):
-            if hfs.exists(pdir):
-                # prior run crashed after the swap, before the sweep:
-                # pdir already holds the compacted data
-                hfs.delete(backup)
-            else:
-                # prior run crashed between the renames: the partition's
-                # only copy is the backup — restore it, then re-compact
-                hfs.rename(backup, pdir)
-        if hfs.exists(staged):
-            # stale stage from a crash before the first rename: the live
-            # partition is intact, the orphan is just leaked bytes
-            hfs.delete(staged)
+        name = f"{partition_col}={dt}"
+        hfs.recover_swap(path, [name], "compact")
+        pdir, staged, _ = hfs.swap_paths(path, name, "compact")
         if not hfs.exists(pdir):
             return None
         files = [
@@ -201,10 +253,8 @@ def compact_partitions(
         part = spark.read.parquet(pdir).coalesce(n_out)
         if sort_cols:
             part = part.sortWithinPartitions(*sort_cols)
-        part.write.mode("overwrite").parquet(staged)  # clobbers stale stages
-        hfs.rename(pdir, backup)
-        hfs.rename(staged, pdir)
-        hfs.delete(backup)
+        part.write.mode("overwrite").parquet(staged)
+        hfs.swap(path, [name], "compact")
         return n_out
 
     if max_parallel <= 1:

@@ -64,6 +64,7 @@ SLOW_TESTS = frozenset({
     "test_bpe_random_corpora_property",
     "test_bq1_serving_contract_random_vectors",
     "test_chunk_level_dedup_content_defined_boundaries",
+    "test_compact_partitions_crash_sweep",
     "test_compact_partitions_on_batch_id_store",
     "test_connected_components_match_union_find",
     "test_curate_corpus_all_gates_composed",
@@ -106,6 +107,7 @@ SLOW_TESTS = frozenset({
     "test_pq_adc_side_hook_matches_inline",
     "test_pq_topk_recall_compression_curve",
     "test_r15_share_hooks_leave_results_identical",
+    "test_retrain_ivf_store_crash_sweep",
     "test_retrain_ivf_store_equals_fresh_geometry",
     "test_retrain_trains_on_latest_vectors_of_reingested_ids",
     "test_rrf_weights_and_ndcg",
@@ -118,6 +120,8 @@ SLOW_TESTS = frozenset({
     "test_sq8_exactness_contract_random_vectors",
     "test_sq8_scalar_quantization",
     "test_store_algo_stamp_refuses_era_mix",
+    "test_store_crash_sweep",
+    "test_store_step_releases_pins_on_failure",
     "test_streaming_file_source_runs",
     "test_video_fingerprint_shift_tolerance",
     "test_video_temporal_majority_near_dup_pairs",

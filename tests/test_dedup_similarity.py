@@ -783,25 +783,94 @@ def test_incremental_minhash_matches_one_shot_batch(spark, tmp_path):
     assert {(r.doc_id, r.dup_of, round(r.jaccard, 12)) for r in fl1.collect()} == per_batch[1]
 
 
-def test_incremental_flag_plan_broadcasts_batch_never_index(spark, tmp_path):
-    """The 100-TB contract of the incremental step: the arriving batch
-    side is broadcast (BroadcastHashJoin / BroadcastExchange), the
-    index parquet scans carry the batch_id partition filter, and no
-    plan node hash-Exchanges the index scan — the index is read, never
-    shuffled."""
+def _index_scans_under_hash_exchange(plan: str, store: str) -> list[str]:
+    """FileScan lines of ``store``'s index whose nearest non-row-local
+    ancestor in a ``treeString`` plan is a hash Exchange — i.e. index
+    rows shuffled before any join pruned them."""
+    import re
+
+    nodes = []
+    for line in plan.splitlines():
+        m = re.search(r"[+:]- ", line)
+        depth, text = (m.start() // 3 + 1, line[m.end():]) if m else (0, line)
+        nodes.append((depth, re.sub(r"^\*\(\d+\) ", "", text.strip())))
+    row_local = ("Project", "Filter", "ColumnarToRow", "InputAdapter",
+                 "WholeStageCodegen")
+    bad = []
+    for i, (depth, text) in enumerate(nodes):
+        if not (text.startswith("FileScan parquet") and store in text):
+            continue
+        j = i
+        while True:
+            j -= 1
+            while j >= 0 and nodes[j][0] >= depth:
+                j -= 1
+            if j < 0:
+                break
+            depth, anc = nodes[j]
+            if not anc.startswith(row_local):
+                if anc.startswith("Exchange hashpartitioning"):
+                    bad.append(text)
+                break
+    return bad
+
+
+@pytest.mark.parametrize("family", ["minhash", "hamming", "winnow", "ivf"])
+def test_incremental_flag_plan_broadcasts_batch_never_index(spark, tmp_path, family):
+    """The 100-TB contract of the incremental step, for every store
+    family: the arriving batch side is broadcast (BroadcastHashJoin /
+    BroadcastExchange), the index parquet scans carry the batch_id
+    partition filter, and no plan node hash-Exchanges the index scan —
+    the index is read, never shuffled."""
+    from crypto_data_pipeline_with_kafka_spark.operators._store_step import (
+        store_flag_plan,
+    )
+    from crypto_data_pipeline_with_kafka_spark.operators.dedup import (
+        _hamming_family,
+        _minhash_family,
+        _winnowing_family,
+        incremental_hamming_dedup,
+        incremental_minhash_dedup,
+        incremental_winnowing_dedup,
+        simhash_bits,
+    )
+    from crypto_data_pipeline_with_kafka_spark.operators.similarity import (
+        _seed_centroids,
+        dbl_vector,
+        incremental_ivf_update,
+    )
+    from crypto_data_pipeline_with_kafka_spark.operators.similarity.stores import (
+        _ivf_family,
+    )
+    from tests.conftest import SF_SMOKE
+
+    store = str(tmp_path / "idx")
+    if family == "ivf":
+        emb = load_table(spark, SF_SMOKE, "embeddings")
+        cents = _seed_centroids(
+            emb.select("vec_id", dbl_vector("embedding").alias("vdbl")), 8, "vec_id"
+        ).localCheckpoint()
+        incremental_ivf_update(emb.filter("vec_id % 2 = 0"), store, 0, centroids=cents)
+        fam = _ivf_family(
+            emb.filter("vec_id % 2 = 1"), spark.read.parquet(f"{store}/centroids"), None
+        )
+    else:
+        docs = load_table(spark, SF_SMOKE, "documents")
+        if family == "hamming":
+            docs = simhash_bits(docs)
+        first, make = {
+            "minhash": (incremental_minhash_dedup, _minhash_family),
+            "hamming": (incremental_hamming_dedup, _hamming_family),
+            "winnow": (incremental_winnowing_dedup, _winnowing_family),
+        }[family]
+        first(docs.filter("doc_id < 250"), store, 0)
+        fam = make(docs.filter("doc_id >= 250"))
+
+    pins: list = []
+    flagged, _ = store_flag_plan(spark, fam, store, 1, pins)
     import io
     from contextlib import redirect_stdout
 
-    from crypto_data_pipeline_with_kafka_spark.operators.dedup import (
-        _incremental_flag_plan,
-        incremental_minhash_dedup,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    store = str(tmp_path / "idx")
-    incremental_minhash_dedup(docs.filter("doc_id < 250"), store, 0)
-
-    flagged, persisted = _incremental_flag_plan(docs.filter("doc_id >= 250"), store, 1)
     buf = io.StringIO()
     with redirect_stdout(buf):
         flagged.explain("formatted")
@@ -813,7 +882,9 @@ def test_incremental_flag_plan_broadcasts_batch_never_index(spark, tmp_path):
     # the candidate join gets the batch side via BroadcastExchange; the
     # index scan feeds join probe sides directly
     assert "BroadcastExchange" in plan
-    for df in persisted:
+    tree = flagged._jdf.queryExecution().executedPlan().treeString()
+    assert _index_scans_under_hash_exchange(tree, store) == [], tree
+    for df in pins:
         df.unpersist()
 
 
