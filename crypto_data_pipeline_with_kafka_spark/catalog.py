@@ -12,6 +12,7 @@ partitioned by date/key; the loaders keep that orthogonal.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -163,6 +164,34 @@ def _estimated_scan_splits(df: DataFrame) -> int | None:
         max(1, max_bytes), max(1, open_cost, total // max(1, target))
     )
     return max(1, -(-total // max_split))
+
+
+def local_relation(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | T.StructType
+) -> DataFrame:
+    """A small literal relation (a dim, a rule list, an empty leg) built
+    on the driver: ``rows`` are tuples in ``schema`` order (a DDL string
+    or a ``StructType``). It goes to the JVM as one Arrow table, which
+    Spark plans as a ``LocalRelation``: a known-size leaf that needs no
+    Python worker to scan. ``spark.createDataFrame(<list>)`` would plan
+    a ``LogicalRDD`` over a PythonRDD instead, and every scan of it
+    sends ``defaultParallelism`` tasks through Python workers. Column
+    types, nullability and values equal those of
+    ``spark.createDataFrame(rows, schema)``, with or without
+    ``spark.sql.execution.arrow.pyspark.enabled``. Every literal
+    relation in the engine goes through here (a test walks the package
+    for stray ``createDataFrame`` calls)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType
 
+from crypto_data_pipeline_with_kafka_spark.catalog import local_relation
+
 # Deterministic sentiment lexicon (VADER-shaped: compound-style score per
 # token; half-point values are exactly representable so summation order
 # cannot perturb results). On real news text this would be the VADER
@@ -195,9 +197,7 @@ def sentiment_lexicon_df(spark, lexicon: dict[str, float] | None = None):
     once per executor as a broadcast relation, so plan size stays O(1)
     at any lexicon size (the full ~7.5k-entry VADER file included)."""
     lex = lexicon if lexicon is not None else active_sentiment_lexicon()
-    return spark.createDataFrame(
-        sorted(lex.items()), "token string, score double"
-    )
+    return local_relation(spark, sorted(lex.items()), "token string, score double")
 
 
 def sentiment_scores_join(

@@ -56,6 +56,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from crypto_data_pipeline_with_kafka_spark.catalog import local_relation
+
 
 @dataclass(frozen=True)
 class StoreBatch:
@@ -321,6 +323,6 @@ def check_store_algo(
             "contract; the winnow store and curate_corpus gates always "
             "stamp)"
         )
-    spark.createDataFrame([(algo,)], "algo string").coalesce(1).write.mode(
+    local_relation(spark, [(algo,)], "algo string").coalesce(1).write.mode(
         "overwrite"
     ).parquet(marker)

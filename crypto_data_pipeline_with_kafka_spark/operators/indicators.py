@@ -39,8 +39,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from crypto_data_pipeline_with_kafka_spark.catalog import local_relation
 
 INDICATOR_TYPES = (("SMA", 1), ("RSI", 2), ("BB_UP", 3), ("BB_DOWN", 4))
 
@@ -50,9 +52,7 @@ WINDOW_ROWS = 14  # trailing frame length, reference spark_job_1.py:28
 def indicator_type_dim(spark: SparkSession) -> DataFrame:
     """The reference's ``dim_indicator_type_1`` seed rows
     (``datawarehouse/indicator_dim_fact.sql:1-9``)."""
-    return spark.createDataFrame(
-        [(name, tid) for name, tid in INDICATOR_TYPES], ["type_name", "type_id"]
-    )
+    return local_relation(spark, INDICATOR_TYPES, "type_name string, type_id long")
 
 
 def compute_indicators(
@@ -71,17 +71,17 @@ def compute_indicators(
     ``spark_job_1.py:28-53``). Rows whose indicator is NULL (warm-up /
     zero-loss RSI) are dropped, mirroring ``spark_job_1.py:54``.
     """
-    w = Window.partitionBy(*key_cols).orderBy(*order_cols)
-    wf = w.rowsBetween(-(frame_rows - 1), 0)
-    v = F.col(value_col)
+    # Three generated SQL levels (lag → frame sums → stack) instead of
+    # ~40 py4j Column calls over six DataFrame steps: plan construction
+    # is one round trip per level. Literals are typed DOUBLE (``0.0D``);
+    # a bare ``0.0`` would be read as DECIMAL(1,1).
+    q = _quote
+    keys = ", ".join(q(c) for c in key_cols)
+    over = f"PARTITION BY {keys} ORDER BY {', '.join(q(c) for c in order_cols)}"
+    frame = f"OVER ({over} ROWS BETWEEN {frame_rows - 1} PRECEDING AND CURRENT ROW)"
+    v = q(value_col)
 
-    diffed = df.withColumn("_diff", v - F.lag(value_col).over(w))
-    gained = diffed.withColumns(
-        {
-            "_gain": F.when(F.col("_diff") > 0, F.col("_diff")).otherwise(F.lit(0.0)),
-            "_loss": F.when(F.col("_diff") < 0, -F.col("_diff")).otherwise(F.lit(0.0)),
-        }
-    )
+    diffed = df.selectExpr("*", f"{v} - lag({v}) OVER ({over}) AS _diff")
     # Frame aggregates are computed as exact DECIMAL sums cast back to
     # double, divided by the frame count — mathematically identical to
     # avg()/stddev_samp() over the frame (the fixture doubles are exact
@@ -94,57 +94,42 @@ def compute_indicators(
     # fits Spark's 38-digit decimals losslessly. Price-like inputs
     # (the reference's domain, and the fixtures) are far inside the
     # bound; out-of-domain inputs should be range-checked upstream.
-    dv = v.cast("decimal(18,6)")
-    n = F.count(F.lit(1)).over(wf)
-    framed = gained.withColumns(
-        {
-            "_n": n,
-            "_sx": F.sum(dv).over(wf).cast("double"),
-            "_sxx": F.sum(dv * dv).over(wf).cast("double"),
-            "_sg": F.sum(F.col("_gain").cast("decimal(18,6)")).over(wf).cast("double"),
-            "_sl": F.sum(F.col("_loss").cast("decimal(18,6)")).over(wf).cast("double"),
-        }
+    dv = f"CAST({v} AS DECIMAL(18,6))"
+    gain = "CASE WHEN _diff > 0 THEN _diff ELSE 0.0D END"
+    loss = "CASE WHEN _diff < 0 THEN -_diff ELSE 0.0D END"
+    carry = [q(c) for c in dict.fromkeys([*key_cols, ts_col])]
+    framed = diffed.selectExpr(
+        *carry,
+        f"count(1) {frame} AS _n",
+        f"CAST(sum({dv}) {frame} AS DOUBLE) AS _sx",
+        f"CAST(sum({dv} * {dv}) {frame} AS DOUBLE) AS _sxx",
+        f"CAST(sum(CAST({gain} AS DECIMAL(18,6))) {frame} AS DOUBLE) AS _sg",
+        f"CAST(sum(CAST({loss} AS DECIMAL(18,6))) {frame} AS DOUBLE) AS _sl",
     )
-    framed = framed.withColumns(
-        {
-            "_sma": F.col("_sx") / F.col("_n"),
-            "_avg_gain": F.col("_sg") / F.col("_n"),
-            "_avg_loss": F.col("_sl") / F.col("_n"),
-            # sample stddev from exact sums; greatest() guards the
-            # sqrt of a tiny negative from cancellation, and n>1 keeps
-            # the reference's NULL-on-1-row-frame semantics.
-            "_sd": F.when(
-                F.col("_n") > 1,
-                F.sqrt(
-                    F.greatest(
-                        (F.col("_sxx") - F.col("_sx") * F.col("_sx") / F.col("_n"))
-                        / (F.col("_n") - 1),
-                        F.lit(0.0),
-                    )
-                ),
-            ),
-        }
+    sma = "(_sx / _n)"
+    # sample stddev from exact sums; greatest() guards the sqrt of a
+    # tiny negative from cancellation, and n>1 keeps the reference's
+    # NULL-on-1-row-frame semantics
+    sd = (
+        "(CASE WHEN _n > 1 THEN "
+        "sqrt(greatest((_sxx - _sx * _sx / _n) / (_n - 1), 0.0D)) END)"
     )
     # rs division: explicit nullif keeps 0-loss frames NULL in both
-    # engines (DuckDB's IEEE mode would otherwise give +inf).
-    rs = F.col("_avg_gain") / F.nullif(F.col("_avg_loss"), F.lit(0.0))
-    enriched = framed.withColumns(
-        {
-            "_rsi": F.lit(100.0) - (F.lit(100.0) / (F.lit(1.0) + rs)),
-            "_bb_up": F.col("_sma") + F.lit(2.0) * F.col("_sd"),
-            "_bb_down": F.col("_sma") - F.lit(2.0) * F.col("_sd"),
-        }
+    # engines (DuckDB's IEEE mode would otherwise give +inf)
+    rs = "((_sg / _n) / nullif(_sl / _n, 0.0D))"
+    stacked = framed.selectExpr(
+        *(q(c) for c in key_cols),
+        f"{q(ts_col)} AS ts",
+        f"stack(4, 'SMA', {sma}, 'RSI', 100.0D - (100.0D / (1.0D + {rs})), "
+        f"'BB_UP', {sma} + 2.0D * {sd}, 'BB_DOWN', {sma} - 2.0D * {sd})"
+        " AS (type_name, ind_value)",
     )
+    return stacked.where("ind_value IS NOT NULL")
 
-    keep = [*key_cols, F.col(ts_col).alias("ts")]
-    stacked = enriched.select(
-        *keep,
-        F.expr(
-            "stack(4, 'SMA', _sma, 'RSI', _rsi, 'BB_UP', _bb_up, 'BB_DOWN', _bb_down)"
-            " as (type_name, ind_value)"
-        ),
-    )
-    return stacked.filter(F.col("ind_value").isNotNull())
+
+def _quote(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def prefilter_to_ingest_range(

@@ -33,9 +33,10 @@ def get_or_create_keys(
     the distinct is a map-side-combined shuffle of just the names.
     """
     # the dim side is small by definition (docstring above), so the
-    # anti-join takes an explicit broadcast: a createDataFrame dim is a
-    # stats-less LogicalRDD, and the un-hinted anti-join planned as a
-    # SortMergeJoin — two exchanges + two sorts for a few dim rows (r15)
+    # anti-join takes an explicit broadcast whatever the dim's source:
+    # a literal dim (catalog.local_relation) is sized, but a dim with no
+    # size estimate would plan the anti-join as a SortMergeJoin — two
+    # exchanges + two sorts for a few dim rows
     new_names = (
         incoming.select(F.col(name_col))
         .distinct()

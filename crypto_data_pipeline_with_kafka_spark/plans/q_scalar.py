@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from crypto_data_pipeline_with_kafka_spark.catalog import load_table
+from crypto_data_pipeline_with_kafka_spark.catalog import load_table, local_relation
 from crypto_data_pipeline_with_kafka_spark.operators.fusion import (
     ndcg_at_k,
     rrf_fuse,
@@ -844,7 +844,7 @@ def udtf_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # returned stats dict becomes one row per stage counter (names on
     # token, counts on n). The stats dict is a bounded driver-side
     # artifact by construction (ONE aggregation row — curation.py's
-    # stats contract), so createDataFrame from it is the BPE-rules
+    # stats contract), so a local relation of it is the BPE-rules
     # pattern, not a collect smell.
     from crypto_data_pipeline_with_kafka_spark.curation import curate_corpus
 
@@ -864,7 +864,8 @@ def udtf_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .unionByName(
-            spark.createDataFrame(
+            local_relation(
+                spark,
                 [
                     (-2000000001, _CURATE_JUNK_QUALITY),
                     (-2000000002, _CURATE_JUNK_RATIO),
@@ -891,7 +892,8 @@ def udtf_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         _, cstats = curate_corpus(spark, planted_cur)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    curate = spark.createDataFrame(
+    curate = local_relation(
+        spark,
         sorted((k, int(v)) for k, v in cstats.items()),
         "token string, n long",
     ).select(

@@ -15,7 +15,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crypto_data_pipeline_with_kafka_spark.catalog import load_table
+from crypto_data_pipeline_with_kafka_spark.catalog import load_table, local_relation
 from crypto_data_pipeline_with_kafka_spark.plans.q_dedup import (
     _BAND_SELECTS,
     _SH_CTE,
@@ -143,8 +143,8 @@ def stream_dedup_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     if lo is None:
         # empty corpus: nothing to stage, the stream would see zero
         # files and the store is never created — the incr leg is empty
-        flags = spark.createDataFrame(
-            [], "doc_id long, dup_of long, jaccard double"
+        flags = local_relation(
+            spark, [], "doc_id long, dup_of long, jaccard double"
         )
     else:
         cuts = [lo, lo + (hi - lo + 1) // 3, lo + 2 * (hi - lo + 1) // 3, hi + 1]

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crypto_data_pipeline_with_kafka_spark.catalog import load_table
+from crypto_data_pipeline_with_kafka_spark.catalog import load_table, local_relation
 from crypto_data_pipeline_with_kafka_spark.functions.text import (
     STOPWORDS,
     BPE_TOKEN_PATTERN,
@@ -940,8 +940,8 @@ def news_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         sentiment_builtin("text", lexicon=SENTIMENT_LEXICON).alias("sentiment"),
     )
-    existing_dim = spark.createDataFrame(
-        [("en", 1), ("es", 2)], "tag_name string, tag_id long"
+    existing_dim = local_relation(
+        spark, [("en", 1), ("es", 2)], "tag_name string, tag_id long"
     )
     dim = get_or_create_keys(
         existing_dim, scored.select(F.col("lang").alias("tag_name")), "tag_name", "tag_id"
@@ -1582,8 +1582,8 @@ def text_mining_suite(
         # caller bug in a library call, but for the REGISTERED query an
         # empty ingest window is routine (the empty-tables sweep): no
         # corpus means no model and no scores, not a crash
-        nbq = spark.createDataFrame(
-            [], "tag string, k1 string, k2 string, n long, v double"
+        nbq = local_relation(
+            spark, [], "tag string, k1 string, k2 string, n long, v double"
         )
     from crypto_data_pipeline_with_kafka_spark.operators.sampling import (
         weighted_sample_exact,
@@ -1606,7 +1606,8 @@ def text_mining_suite(
         docs, n_merges=_BPE_MERGES, min_pair_freq=_BPE_MIN_FREQ,
         stats=bstats, toks=toked,
     )
-    bpe_rules = spark.createDataFrame(
+    bpe_rules = local_relation(
+        spark,
         [
             (a, b, i + 1, float(c))
             for i, ((a, b), c) in enumerate(

@@ -414,37 +414,44 @@ def run_incremental_indicator_stream(
     kc = list(key_cols)
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        s = batch.sparkSession
-        batch = _with_dt(batch)
+        pins: list[DataFrame] = []
+        try:
+            _handle_batch(batch.sparkSession, batch, pins)
+        finally:  # released before the next micro-batch, also on failure
+            for df in pins:
+                df.unpersist()
+
+    def _handle_batch(s: SparkSession, batch: DataFrame, pins: list) -> None:
+        # pinned before the bounds probe, so the source file is scanned
+        # once per micro-batch
+        batch = _with_dt(batch).persist()
+        pins.append(batch)
         bounds = batch.agg(F.min("dt").alias("lo"), F.max("dt").alias("hi")).first()
         if bounds["lo"] is None:  # empty batch
             return
-        stores_exist = target_exists(s, events_store)
-        if stores_exist:
-            # dedupe redelivered rows against the store, partition-pruned
-            seen = pruned_store_read(s, events_store, bounds["lo"], bounds["hi"])
-            fresh = batch.join(seen.select("event_id"), "event_id", "left_anti")
+        if target_exists(s, events_store):
             lo_hist = None
             if lookback_days is not None:
                 lo = _dt.date.fromisoformat(bounds["lo"])
                 lo_hist = (lo - _dt.timedelta(days=lookback_days)).isoformat()
-            history = pruned_store_read(s, events_store, lo_hist, None).drop("dt")
+            # one store read (one listing, one schema inference) serves
+            # the history tail and, pruned to the batch's own partitions,
+            # the dedup of redelivered rows
+            stored = pruned_store_read(s, events_store, lo_hist, None)
+            seen = stored.filter(F.col("dt").between(bounds["lo"], bounds["hi"]))
+            fresh = batch.join(seen.select("event_id"), "event_id", "left_anti")
+            history = stored.drop("dt")
         else:
             fresh = batch
             history = batch.drop("dt").limit(0)
-        # `fresh` feeds several actions in this batch (emptiness probe,
-        # bounds, recompute, two writes) — persist so the store anti-join
-        # runs once, and release before the next micro-batch
+        # `fresh` feeds several actions (the probe, the recompute, two
+        # writes): pinned so the store anti-join runs once
         fresh = fresh.persist()
-        try:
-            _handle_fresh(s, fresh, history)
-        finally:
-            fresh.unpersist()
-
-    def _handle_fresh(s: SparkSession, fresh: DataFrame, history: DataFrame) -> None:
-        if fresh.isEmpty():  # fully-redelivered batch → no-op
+        pins.append(fresh)
+        probe = fresh.agg(F.count(F.lit(1)).alias("n"), F.min("dt").alias("lo")).first()
+        if probe["n"] == 0:  # fully-redelivered batch → no-op
             return
-        f_lo = fresh.agg(F.min("dt").alias("lo")).first()["lo"]
+        f_lo = probe["lo"]
         inc = _with_dt(
             incremental_indicator_batch(history, fresh.drop("dt"), key_cols=kc)
         )

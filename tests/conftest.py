@@ -2,10 +2,12 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# import the engine from this checkout, whatever the working directory
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from crypto_data_pipeline_with_kafka_spark.session import get_spark
 

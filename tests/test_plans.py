@@ -86,6 +86,29 @@ def test_no_python_udf_in_builtin_paths(spark):
         assert "ArrowEvalPython" not in plan, name
 
 
+def test_no_python_rdd_scan_in_dashboard_paths(spark):
+    """The dashboard read path runs no Python worker: a literal relation
+    built from a Python list scans as ``Scan ExistingRDD`` over a
+    PythonRDD (one Python-worker task per default-parallelism slot on
+    every scan); literal relations must be LocalRelations
+    (``catalog.local_relation``)."""
+    dashboard = (
+        "ind_pipeline",
+        "agg_q1",
+        "win_tumbling_candles",
+        "win_sessionize",
+        "rel_asof_join",
+        "topk_per_group",
+        "news_pipeline",
+    )
+    rdd_scans = [
+        name
+        for name in dashboard
+        if "ExistingRDD" in plan_of(all_queries()[name].fn(spark, SF), "simple")
+    ]
+    assert not rdd_scans, rdd_scans
+
+
 def test_partitioned_warehouse_prunes(spark, tmp_path):
     """The warehouse layout: date-partitioned facts, and a time-range
     read whose partition filter prunes directories at planning time."""

@@ -283,6 +283,79 @@ def test_streaming_incremental_indicators_redelivery_noop(spark, tmp_path):
     assert spark.read.parquet(ind_store).count() == n_ind
 
 
+def test_incremental_indicator_stream_scans_source_once_and_releases_pins(
+    spark, tmp_path, sf_smoke
+):
+    """Each micro-batch reads its source file once (the batch is pinned
+    before the bounds probe), so the stream's input-row count equals
+    the staged rows; and no pin outlives the stream, whether its
+    batches succeed or one fails."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from crypto_data_pipeline_with_kafka_spark.streaming.pipeline import (
+        run_incremental_indicator_stream,
+    )
+
+    class _InputRows(StreamingQueryListener):
+        def __init__(self):
+            self.rows = 0
+            self.done = threading.Event()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.rows += event.progress.numInputRows
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done.set()
+
+    events = load_table(spark, sf_smoke, "events")
+    src = str(tmp_path / "src")
+    cutoff = F.lit("2024-01-15").cast("timestamp")
+    as_ns = events.withColumn("ts", F.unix_micros("ts") * 1000)
+    ts_back = F.timestamp_micros(F.expr("ts div 1000"))
+    as_ns.filter(ts_back < cutoff).coalesce(1).write.parquet(src)
+    as_ns.filter(ts_back >= cutoff).coalesce(1).write.mode("append").parquet(src)
+
+    jcm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    listener = _InputRows()
+    spark.streams.addListener(listener)
+    try:
+        run_incremental_indicator_stream(
+            spark,
+            src + "/*.parquet",
+            str(tmp_path / "events_store"),
+            str(tmp_path / "ind_store"),
+            lookback_days=60,
+        )
+        assert listener.done.wait(30)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.rows == events.count() > 0
+    assert jcm.isEmpty()
+
+    # a batch that fails after pinning: the indicator store path is a
+    # plain file, so the first write raises inside the batch handler
+    bad_store = tmp_path / "not_a_dir"
+    bad_store.write_text("x")
+    with pytest.raises(Exception):
+        run_incremental_indicator_stream(
+            spark,
+            src + "/*.parquet",
+            str(tmp_path / "events_store2"),
+            str(bad_store),
+            lookback_days=60,
+        )
+    assert jcm.isEmpty()
+
+
 def test_pruned_store_read_has_partition_filters(spark, tmp_path):
     """The per-batch anti-join/history read must prune date partitions
     at planning time (PartitionFilters), so a micro-batch reads
